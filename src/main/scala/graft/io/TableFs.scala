@@ -3,7 +3,7 @@ package graft.io
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 
 /** Manifest I/O for the storage layer (graft.ops.VersionedTable /
@@ -52,6 +52,16 @@ object TableFs {
     val f = fs(p)
     if (!f.exists(p)) Seq.empty
     else f.listStatus(p).toSeq.map(_.getPath.getName)
+  }
+
+  /** Status (name, length, modification time) of a directory's parquet
+    * files; empty when the directory is absent.
+    */
+  def parquetFiles(dir: String): Seq[FileStatus] = {
+    val p = new HPath(dir)
+    val f = fs(p)
+    if (!f.exists(p)) Seq.empty
+    else f.listStatus(p).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
   }
 
   def readUtf8(path: String): String = {

@@ -39,11 +39,15 @@ object SentinelFiles {
 
   /** Write `rows` as one small parquet file (`sentinel.parquet`) under
     * `dir`, in the raw events schema, without launching a Spark job.
+    * Every parquet file already in `dir` is deleted first, so a reused
+    * directory reads back only `rows`.
     */
   def writeEvents(dir: java.nio.file.Path,
                   rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
+    val stale = java.nio.file.Files.newDirectoryStream(dir, "*.parquet")
+    try stale.forEach(f => java.nio.file.Files.delete(f))
+    finally stale.close()
     val file = dir.resolve("sentinel.parquet")
-    java.nio.file.Files.deleteIfExists(file)
     val conf = new Configuration()
     val out = HadoopOutputFile.fromPath(
       new org.apache.hadoop.fs.Path(file.toUri), conf)

@@ -337,13 +337,38 @@ class Extension25Spec extends SparkSpec {
     assert(ids == Seq(0L))
   }
 
+  private def canon(df: org.apache.spark.sql.DataFrame) = df
+    .collect()
+    .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    .sortBy(t => (t._1, t._2)).toSeq
+
+  private def rmAll(p: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
+      .foreach(f => java.nio.file.Files.deleteIfExists(f))
+  }
+
+  /** Spark jobs launched while `body` runs (the listener bus drained). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.sql.graftbridge.Bridge
+        .waitListenerBusEmpty(spark.sparkContext)
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("persisted ivf-pq index round-trip == in-session ivfPqTopK") {
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val probes = e.filter(col("vec_id") < 5)
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._1, t._2)).toSeq
     val inSession = canon(SimilaritySearch.ivfPqTopK(probes, e, 5,
       nCentroids = 16, nProbe = 4, m = 8, ksub = 16))
     val idx = java.nio.file.Files.createTempDirectory("graft_rt_idx")
@@ -355,11 +380,7 @@ class Extension25Spec extends SparkSpec {
       assert(fromDisk.nonEmpty)
       assert(fromDisk == inSession,
         "the persisted index must serve byte-identical results")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(idx).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    }
+    } finally rmAll(idx)
   }
 
   test("ivf-pq incremental append: touched cells only, batch-split " +
@@ -369,10 +390,6 @@ class Extension25Spec extends SparkSpec {
     val base = e.where(col("vec_id") % 10 =!= 0)
     val delta = e.where(col("vec_id") % 10 === 0)
     val probes = e.filter(col("vec_id") < 5)
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._1, t._2)).toSeq
     def cellFiles(idx: java.nio.file.Path): Map[String, Set[String]] = {
       val codes = idx.resolve("codes")
       java.nio.file.Files.list(codes).iterator().asScala
@@ -384,9 +401,6 @@ class Extension25Spec extends SparkSpec {
               .filter(_.endsWith(".parquet")).toSet
         }.toMap
     }
-    def rmAll(p: java.nio.file.Path): Unit =
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
     val idx1 = java.nio.file.Files.createTempDirectory("graft_inc1")
     val idx2 = java.nio.file.Files.createTempDirectory("graft_inc2")
     try {
@@ -433,16 +447,56 @@ class Extension25Spec extends SparkSpec {
     } finally { rmAll(idx1); rmAll(idx2) }
   }
 
-  test("ivf-pq tombstone delete + compaction: serve-time filtering, " +
-    "affected-cells-only rewrite, sidecar dropped") {
+  test("ivf-pq sidecars decode once: a repeated read of an unchanged " +
+    "index launches no Spark job") {
+    val e = Tables.load(spark, sf0001, "embeddings")
+    val idx = java.nio.file.Files.createTempDirectory("graft_side_once")
+    try {
+      SimilaritySearch.writeIvfPqIndex(e, idx.toString,
+        nCentroids = 16, m = 8, ksub = 16)
+      val (first, firstJobs) = jobsDuring(
+        SimilaritySearch.readIvfPqSidecars(spark, idx.toString))
+      assert(firstJobs > 0, "the first read of a new index must decode it")
+      val (again, againJobs) = jobsDuring(
+        SimilaritySearch.readIvfPqSidecars(spark, idx.toString))
+      assert(againJobs == 0,
+        s"a repeated sidecar read launched $againJobs Spark jobs")
+      assert(again == first)
+    } finally rmAll(idx)
+  }
+
+  test("ivf-pq rebuild at the same path with new nCentroids/ksub serves " +
+    "the new index, not the cached sidecars") {
+    val e = Tables.load(spark, sf0001, "embeddings")
+    val probes = e.filter(col("vec_id") < 5)
+    val idx = java.nio.file.Files.createTempDirectory("graft_side_rebuild")
+    try {
+      SimilaritySearch.writeIvfPqIndex(e, idx.toString,
+        nCentroids = 16, m = 8, ksub = 16)
+      val old = canon(SimilaritySearch.ivfPqTopKFromIndex(
+        probes, idx.toString, 5, nProbe = 4))
+      SimilaritySearch.writeIvfPqIndex(e, idx.toString,
+        nCentroids = 8, m = 8, ksub = 8)
+      val (cents, cb) =
+        SimilaritySearch.readIvfPqSidecars(spark, idx.toString)
+      assert(cents.size == 8 && cb.head.size == 8)
+      val served = canon(SimilaritySearch.ivfPqTopKFromIndex(
+        probes, idx.toString, 5, nProbe = 4))
+      val inSession = canon(SimilaritySearch.ivfPqTopK(probes, e, 5,
+        nCentroids = 8, nProbe = 4, m = 8, ksub = 8))
+      assert(served.nonEmpty && served == inSession,
+        "a rebuilt index must serve like its in-session twin")
+      assert(served != old, "the rebuild must change some top-k or the " +
+        "test proves nothing")
+    } finally rmAll(idx)
+  }
+
+  /** Delete + compaction through an index addressed as `index(dir)`. */
+  private def tombstoneCase(index: java.nio.file.Path => String): Unit = {
     import scala.jdk.CollectionConverters._
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val probes = e.filter(col("vec_id") < 5)
     val deadIds = e.where(col("vec_id") % 20 === 5).select("vec_id")
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._1, t._2)).toSeq
     def cellFiles(idx: java.nio.file.Path): Map[String, Set[String]] = {
       java.nio.file.Files.list(idx.resolve("codes")).iterator().asScala
         .filter(p => p.getFileName.toString.startsWith("cell="))
@@ -453,19 +507,17 @@ class Extension25Spec extends SparkSpec {
               .filter(_.endsWith(".parquet")).toSet
         }.toMap
     }
-    def rmAll(p: java.nio.file.Path): Unit =
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
     val idx = java.nio.file.Files.createTempDirectory("graft_del1")
+    val path = index(idx)
     try {
-      SimilaritySearch.writeIvfPqIndex(e, idx.toString,
+      SimilaritySearch.writeIvfPqIndex(e, path,
         nCentroids = 16, m = 8, ksub = 16)
       val servedFull = canon(SimilaritySearch.ivfPqTopKFromIndex(
-        probes, idx.toString, 5, nProbe = 4))
-      SimilaritySearch.deleteFromIvfPqIndex(deadIds, idx.toString)
+        probes, path, 5, nProbe = 4))
+      SimilaritySearch.deleteFromIvfPqIndex(deadIds, path)
       // 1) pending tombstones filter at serve time — no dead neighbor
       val servedTomb = canon(SimilaritySearch.ivfPqTopKFromIndex(
-        probes, idx.toString, 5, nProbe = 4))
+        probes, path, 5, nProbe = 4))
       val dead = deadIds.collect().map(_.getLong(0)).toSet
       assert(dead.nonEmpty && servedTomb.nonEmpty)
       assert(!servedTomb.exists(r => dead.contains(r._3)),
@@ -479,7 +531,7 @@ class Extension25Spec extends SparkSpec {
         .select("cell").distinct().collect()
         .map(r => s"cell=${r.getInt(0)}").toSet
       val before = cellFiles(idx)
-      SimilaritySearch.compactIvfPqIndex(spark, idx.toString)
+      SimilaritySearch.compactIvfPqIndex(spark, path)
       val after = cellFiles(idx)
       // 2) ONLY affected cells were rewritten; unaffected untouched
       before.foreach { case (cell, files) =>
@@ -500,9 +552,19 @@ class Extension25Spec extends SparkSpec {
         "dead rows survived compaction in the codes files")
       // 4) serving is unchanged by compaction
       val servedCompact = canon(SimilaritySearch.ivfPqTopKFromIndex(
-        probes, idx.toString, 5, nProbe = 4))
+        probes, path, 5, nProbe = 4))
       assert(servedCompact == servedTomb,
         "compaction changed served results")
     } finally rmAll(idx)
+  }
+
+  test("ivf-pq tombstone delete + compaction: serve-time filtering, " +
+    "affected-cells-only rewrite, sidecar dropped") {
+    tombstoneCase(_.toString)
+  }
+
+  test("ivf-pq tombstone delete + compaction through a file:// URI index " +
+    "path") {
+    tombstoneCase(d => s"file://${d.toAbsolutePath}")
   }
 }

@@ -364,6 +364,15 @@ class PlanSpec extends SparkSpec {
       assert(prunedFiles.nonEmpty &&
         prunedFiles.head.value < fullCount,
         s"pruned scan read ${prunedFiles.map(_.value)} of $fullCount files")
+      // the scan serving actually runs carries the same pushdown (one
+      // query vector probes nProbe = 4 cells, below the INSET threshold)
+      val served = graft.ext.SimilaritySearch.ivfPqTopKFromIndex(
+        emb.filter(col("vec_id") === 0), idx.toString, 5)
+      val sp = served.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      assert(sp.linesIterator.exists(l => l.contains("PartitionFilters") &&
+        l.contains("cell") && l.toUpperCase.contains(" IN ")),
+        s"served plan does not prune the codes scan to probed cells:\n$sp")
     } finally {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(idx).iterator().asScala.toSeq.reverse

@@ -550,4 +550,23 @@ class StreamingSpec extends SparkSpec {
       graft.io.FsUtil.deleteRecursively(directDir)
     }
   }
+
+  test("SentinelFiles.writeEvents into a reused directory reads back only " +
+    "the new rows") {
+    val dir = Files.createTempDirectory("graft_sent_reused")
+    try {
+      // a stale Spark-written part file (and an earlier sentinel) in the dir
+      Seq((7L, 1L, 7L, "view", 1.0, "{}"), (8L, 2L, 8L, "view", 2.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode("overwrite").parquet(dir.toString)
+      graft.streaming.SentinelFiles.writeFlushSentinel(dir)
+      val rows = Seq(
+        (-2L, EventStreams.FlushSentinelNanos, -2L, "purchase", 0.5, "{}"))
+      graft.streaming.SentinelFiles.writeEvents(dir, rows)
+      val got = spark.read.schema(EventStreams.rawSchema).parquet(dir.toString)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(got == Seq((-2L, EventStreams.FlushSentinelNanos)),
+        s"read back $got")
+    } finally graft.io.FsUtil.deleteRecursively(dir)
+  }
 }
