@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every registered query at
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -27,32 +25,29 @@ import org.apache.spark.sql.SparkSession
   *    BENCH_OUTLIER warning goes to stderr so a contended box is visible
   *    in the round log instead of silently entering the record;
   *  - `value` is the sum over the per-query wall-clock seconds in
-  *    `queries`.
+  *    `queries`;
+  *  - a query whose every timed run throws reports NO time: it is left
+  *    out of `queries`, `value` and the tier sums and named in the
+  *    `"failed"` array of both the printed line and BENCH_SELF.json (a
+  *    crash is not a fast run).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r10 verdict item 8 (tier-1 streaming spread): the state-store
-      // maintenance thread fires every 60s by default — mid-bench it
-      // snapshots/cleans RocksDB instances of EARLIER queries while a
-      // LATER one is being timed, which is pure cross-query noise.
-      // Parking it for the bench's lifetime keeps each streaming gate's
-      // cost its own; correctness is unaffected (maintenance is an
-      // optimization, and every bench query's state dies with its
-      // checkpoint anyway).
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Engine.session(master = s"local[$cpus]",
+      shufflePartitions = cpus, appName = "graft-bench")
+    // r10 verdict item 8 (tier-1 streaming spread): the state-store
+    // maintenance thread fires every 60s by default — mid-bench it
+    // snapshots/cleans RocksDB instances of EARLIER queries while a
+    // LATER one is being timed, which is pure cross-query noise.
+    // Parking it for the bench's lifetime keeps each streaming gate's
+    // cost its own; correctness is unaffected (maintenance is an
+    // optimization, and every bench query's state dies with its
+    // checkpoint anyway). A runtime SQL conf: the first stateful query
+    // (in the warmup pass) reads it when it starts the maintenance task.
+    spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
 
     // label every run's jobs (guide §1.5) so a UI/eventlog reading of a
     // bench pass attributes stages to queries without guesswork
@@ -62,18 +57,12 @@ object Bench {
       finally spark.sparkContext.setJobDescription(null)
     }
 
-    def timeOnce(q: graft.queries.Q): (Double, Boolean) = {
+    // a failed run is not a time: a 0.1s crash must never become the
+    // reported minimum, so a run yields seconds only when it succeeds
+    def timeOnce(q: graft.queries.Q): Option[Double] = {
       val t0 = System.nanoTime()
-      val ok = try { runOnce(q, sfDir); true } catch { case _: Throwable => false }
-      ((System.nanoTime() - t0) / 1e9, ok)
-    }
-
-    // a failed run must not become the reported minimum (a 0.1s crash
-    // would silently replace the query's real time) — prefer min over
-    // successful runs; only if every run failed, report the failure time
-    def minGood(times: Seq[(Double, Boolean)]): Double = {
-      val good = times.filter(_._2)
-      if (good.nonEmpty) good.map(_._1).min else times.map(_._1).min
+      try { runOnce(q, sfDir); Some((System.nanoTime() - t0) / 1e9) }
+      catch { case _: Throwable => None }
     }
 
     // SPARK_GRAFT_BENCH_ONLY=q65_skew_join_agg,q44_jaccard_pairs — time a
@@ -150,28 +139,31 @@ object Bench {
     // signal.
     val tier1Runs = sys.env.get("SPARK_GRAFT_BENCH_TIER1_RUNS")
       .map(_.toInt).getOrElse(runs + 2).max(runs)
-    val results = ordered.map { q =>
+    val timed = ordered.map { q =>
       val nRuns = if (tier1Names(q.name)) tier1Runs else runs
-      val first = (1 to nRuns).map(_ => timeOnce(q))
-      val t1 = minGood(first)
-      val prior = baseline.get(q.name)
-      val suspicious = prior.exists(p => t1 > 2 * p && t1 > 1.0)
-      val t =
+      // min over successful runs; None when every run failed
+      val t = (1 to nRuns).flatMap(_ => timeOnce(q)).minOption.map { t1 =>
+        val prior = baseline.get(q.name)
+        val suspicious = prior.exists(p => t1 > 2 * p && t1 > 1.0)
         if (!suspicious) t1
         else {
           // transient contention (GC, a stray process) shows up as an
           // isolated slow cluster; two more runs give it a chance to
           // clear before the number enters the record
           val extra = (1 to 2).map(_ => timeOnce(q))
-          val t2 = math.min(t1, minGood(extra))
+          val t2 = (t1 +: extra.flatten).min
           if (prior.exists(p => t2 > 2 * p && t2 > 1.0))
             System.err.println(
               f"BENCH_OUTLIER ${q.name} ${t2}%.2fs vs historical min ${prior.get}%.2fs " +
                 "(persisted across 2 extra runs - box contention or a real regression)")
           t2
         }
+      }
       q.name -> t
     }
+    val results = timed.collect { case (n, Some(t)) => n -> t }
+    val failed = timed.collect { case (n, None) => n }
+    failed.foreach(n => System.err.println(s"BENCH_FAILED $n (every timed run threw)"))
     // The driver stores only the LAST 2000 CHARS of this process's output
     // and parses the JSON line out of that tail. With 240+ queries the
     // full per-query map is ~7 KB, so a full-map line gets front-clipped
@@ -186,14 +178,15 @@ object Bench {
     val tier1Total = results.filter(kv => tier1Names(kv._1)).map(_._2).sum
     def entryStr(kv: (String, Double)): String =
       "\"" + kv._1 + "\":" + f"${kv._2}%.3f"
+    def jsonList(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
     val tierFields =
       s""""tier1_n":${tier1Names.size},""" +
         s""""tier1_sec":${f"$tier1Total%.3f"},""" +
         s""""tier2_sec":${f"${total - tier1Total}%.3f"},"""
     val fullLine =
       s"""{"queries":${results.map(entryStr).mkString("{", ",", "}")},""" +
-        s""""tier1":${tier1Names.toSeq.sorted.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
+        s""""tier1":${jsonList(tier1Names.toSeq.sorted)},""" +
+        s""""failed":${jsonList(failed)},""" +
         tierFields +
         s""""sf":"$sfDir","n_queries":${results.size},""" +
         s""""metric":"total","unit":"sec","value":${f"$total%.3f"}}"""
@@ -207,17 +200,20 @@ object Bench {
           System.getProperty("user.dir"), "BENCH_SELF.json"))
       java.nio.file.Files.writeString(self, fullLine + "\n")
     } catch { case _: Throwable => () }
+    // failed names spend the budget first: they are the loud part, and
+    // the full list is in BENCH_SELF.json should they overflow it
     val budget = 1400
-    val bySlowest = results.sortBy(-_._2)
+    val keptFailed = new scala.collection.mutable.ListBuffer[String]
     val kept = new scala.collection.mutable.ListBuffer[String]
     var used = 0
-    bySlowest.foreach { kv =>
-      val s = entryStr(kv)
-      if (used + s.length + 1 <= budget) { kept += s; used += s.length + 1 }
-    }
+    def keep(buf: scala.collection.mutable.ListBuffer[String], s: String): Unit =
+      if (used + s.length + 1 <= budget) { buf += s; used += s.length + 1 }
+    failed.foreach(n => keep(keptFailed, "\"" + n + "\""))
+    results.sortBy(-_._2).foreach(kv => keep(kept, entryStr(kv)))
     val line =
       s"""{"queries":${kept.mkString("{", ",", "}")},""" +
         s""""queries_shown":${kept.size},"queries_full_in":"BENCH_SELF.json",""" +
+        s""""failed":${keptFailed.mkString("[", ",", "]")},"n_failed":${failed.size},""" +
         tierFields +
         s""""sf":"$sfDir","n_queries":${results.size},""" +
         s""""metric":"total","unit":"sec","value":${f"$total%.3f"}}"""

@@ -14,14 +14,18 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle.partitions sized to cores locally; on a real cluster this is
   *    overridden by AQE's target advisory size anyway.
   *  - UTC session timezone so timestamp semantics match the DuckDB oracle.
+  *
+  * This is the only place a session is built: Bench, Verify, the tools,
+  * the test trait and perfbench all call [[session]] (SessionSpineSpec
+  * guards it), and the engine's SQL functions arrive through the
+  * extension's one table, [[GraftExtensions.functions]].
   */
 object Engine {
   def session(
       master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors(),
       appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
-      .builder()
+    val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
       .withExtensions(new GraftExtensions)
@@ -34,41 +38,7 @@ object Engine {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    registerFunctions(spark)
     spark
-  }
-
-  /** Expose the engine's custom Catalyst expressions to SQL:
-    * `SELECT cosine_sim(a.embedding, b.embedding) FROM ...` etc. — the
-    * same codegen'd expressions the Column API uses, so SQL users pay no
-    * UDF penalty.
-    */
-  def registerFunctions(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    import graft.functions._
-    Bridge.registerFunction(spark, "poly_hash", es => PolyHash(es.head))
-    Bridge.registerFunction(spark, "cosine_sim", es => CosineSimilarity(es(0), es(1)))
-    Bridge.registerFunction(spark, "dot_product", es => DotProduct(es(0), es(1)))
-    Bridge.registerFunction(spark, "shingle_hashes",
-      es => ShingleHashes(es.head, 3))
-    Bridge.registerFunction(spark, "tokenize_with_offsets",
-      es => TokenizeWithOffsets(es(0),
-        org.apache.spark.sql.catalyst.expressions.Cast(es(1),
-          org.apache.spark.sql.types.LongType)))
-    Bridge.registerFunction(spark, "lsh_bucket",
-      graft.ext.SimilaritySearch.lshBucketBuilder)
-    Bridge.registerFunction(spark, "word_ngrams", WordNgrams.builder)
-    Bridge.registerFunction(spark, "nfc_normalize", es => NfcNormalize(es.head))
-    Bridge.registerFunction(spark, "winnowed_fingerprints",
-      WinnowedFingerprints.builder)
-    Bridge.registerFunction(spark, "jaro_winkler",
-      es => JaroWinkler(es(0), es(1)))
-    Bridge.registerFunction(spark, "damerau_levenshtein",
-      es => DamerauLevenshtein(es(0), es(1)))
-    Bridge.registerFunction(spark, "l2_distance",
-      es => L2Distance(es(0), es(1)))
-    Bridge.registerFunction(spark, "hilbert_index",
-      HilbertIndex.builder)
   }
 
   /** Register every fixture table as a temp view so plain

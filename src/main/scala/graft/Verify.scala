@@ -1,32 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, plus
+  * verify_failures.json (`{name: message}`) naming every query that
+  * crashed instead of writing its parquet. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Engine.session(master = s"local[$cpus]",
+      shufflePartitions = cpus, appName = "graft-verify")
     // clear any previous run's outputs: a failing query must not leave
     // stale parquet behind for the oracle compare to "pass" against
-    val outRoot = new java.io.File(outDir)
-    if (outRoot.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(outRoot)
-    }
-    outRoot.mkdirs()
+    graft.io.FsUtil.deleteRecursively(outDir)
+    Files.createDirectories(Paths.get(outDir))
     // SPARK_GRAFT_VERIFY_ONLY=q128,q42 — dump a subset (dev iteration;
     // the driver always runs the full registry)
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
@@ -36,11 +23,14 @@ object Verify {
         case (n, _) => names.exists(n.startsWith) }
       case None => SparkEntry.queries
     }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failures = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> Option(e.getMessage).getOrElse(e.toString))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -55,10 +45,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def obj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }))
+    Files.writeString(Paths.get(s"$outDir/verify_failures.json"), obj(failures))
     spark.stop()
   }
 }

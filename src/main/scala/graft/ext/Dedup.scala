@@ -393,11 +393,11 @@ object Dedup {
     * the hottest shingles land outside every prefix — at the cost of two
     * extra shuffles (a frequency aggregation over exploded shingles and
     * a per-doc re-sort). Measured at sf0.1 on the documents fixture
-    * (tools.NearDupProbe round 4): 429,655 candidates (hash, 1.22s) vs
+    * (round 4): 429,655 candidates (hash, 1.22s) vs
     * 309,881 (freq, 2.76s) — a 1.39× candidate reduction that costs
     * 2.3× wall-clock, far under the ≥2× reduction that would pay for
     * the extra shuffles, so hash order stays the default; on a corpus
-    * with power-law-hot shingles re-measure with the same probe.
+    * with power-law-hot shingles re-measure both orders.
     */
   private[graft] def prefixFilterCandidates(docs: DataFrame, threshold: Double,
                                             freqOrder: Boolean): DataFrame = {

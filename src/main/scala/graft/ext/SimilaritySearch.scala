@@ -59,8 +59,7 @@ object SimilaritySearch {
     VectorFunctions.hyperplaneBucket(vec, ps)
 
   /** Shared SQL-function builder for `lsh_bucket(vec, nPlanes, dim,
-    * seed)` — used by both registration paths (Engine.registerFunctions
-    * and GraftExtensions) so they cannot diverge. The three int args
+    * seed)` — the GraftExtensions function-table entry. The three int args
     * must be literals: the plane matrix is generated at resolution time.
     */
   def lshBucketBuilder(
@@ -201,9 +200,9 @@ object SimilaritySearch {
 
   /** The candidate-pair stage of [[multiProbeTopK]]: the DISTINCT
     * (query_id, neighbor_id, qv, cv) pairs reached through the probed
-    * bucket union, before scoring/ranking. Exposed separately so tooling
-    * (MultiProbeScaleProbe) can measure the TRUE candidate volume — the
-    * bucket-union size after dedup — rather than an upper bound.
+    * bucket union, before scoring/ranking. Exposed separately so the TRUE
+    * candidate volume — the bucket-union size after dedup — can be
+    * measured rather than an upper bound.
     */
   def multiProbeCandidates(queries: DataFrame, corpus: DataFrame,
                            idCol: String = "vec_id",

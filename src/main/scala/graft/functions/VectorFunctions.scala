@@ -150,7 +150,7 @@ case class DotProduct(left: Expression, right: Expression)
   * formulation inlines one dot loop per plane into the generated method —
   * at 4 tables × 16 planes the method passes HotSpot's 8 KB huge-method
   * limit and the whole stage silently runs in the bytecode interpreter
-  * (measured 13.8× slowdown in BucketProbe). Here the plane matrix rides
+  * (measured 13.8× slowdown). Here the plane matrix rides
   * along as a codegen reference object and the generated code is one
   * compact nested loop, independent of plane count.
   *

@@ -49,8 +49,8 @@ object ZOrder {
     * domain: `(c · 65536) div (maxVal + 1)`. Interleaving only helps when
     * BOTH dimensions occupy comparable bit widths — a dimension with few
     * distinct values contributes only low-order bits, and the z-order
-    * degenerates to a plain sort on the wider column (measured by
-    * tools.ZOrderProbe: un-stretched suppkey pruned nothing). Production
+    * degenerates to a plain sort on the wider column (measured: an
+    * un-stretched suppkey pruned nothing). Production
     * layouts use a per-column range-bucket rank (the Delta/Iceberg
     * approach); min-max stretch is the cheap shuffle-free variant for
     * roughly-uniform keys. Exact integer arithmetic (`div`, never `/`).

@@ -88,7 +88,7 @@ object Tables {
     * file — repartition immediately after the read"): each fixture is
     * ONE parquet file with ONE row group, so the scan plans as ONE
     * split and the entire scan+map side of a query runs on a single
-    * core of the machine (StageCountProbe measured 9 stages / 9 TASKS
+    * core of the machine (measured: 9 stages / 9 TASKS
     * for q270's whole pipeline). When the planned scan parallelism is
     * below the session's cores, hash-repartition on the table's unique
     * key right after the read so heavy per-row work (char-bigram

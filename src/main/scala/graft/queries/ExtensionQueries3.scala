@@ -262,9 +262,9 @@ object ExtensionQueries3 {
     // q101: Z-order layout key — the Morton interleave of (l_partkey,
     // l_suppkey) that gives BOTH columns min/max-pruning locality when
     // the table is range-partitioned and sorted by it (a plain sort
-    // favors only its leading column; tools.ZOrderProbe measures point
-    // filters touching 32%/23% of partitions vs 100% for the non-leading
-    // column). Each dimension is min-max-stretched into the full 16-bit
+    // favors only its leading column; measured point filters touch
+    // 32%/23% of partitions vs 100% for the non-leading column).
+    // Each dimension is min-max-stretched into the full 16-bit
     // domain first — without that, a narrow key contributes only
     // low-order bits and the interleave degenerates to a plain sort
     // (ZOrder.stretch16 scaladoc). Pure codegen'd bitwise/div built-ins,

@@ -140,10 +140,10 @@ object ExtensionQueries31 {
     // SAME cap, so the gate stays bit-exact; at fixture SFs no center
     // exceeds the cap (scores identical to uncapped). Centers are
     // filtered BEFORE the join (GraphSpec pins bounded wedge work on
-    // a planted 1k-spoke hub). Measured (tools/GraphScaleProbe,
-    // fixed-catalog co-purchase graph grown 100k→1M orders =
-    // 12.5k→419k edges): uncapped wedge count grows m^1.29
-    // (3.0M→282M) while the cap-64 count grows m^0.81 (109k→1.9M) —
+    // a planted 1k-spoke hub). Measured (fixed-catalog co-purchase
+    // graph grown 100k→1M orders = 12.5k→419k edges): uncapped wedge
+    // count grows m^1.29 (3.0M→282M) while the cap-64 count grows
+    // m^0.81 (109k→1.9M) —
     // a 150× work cut at the larger size, widening with scale. Also
     // r9: the support count pre-distincts (order, part) instead of
     // countDistinct per pair — same result, one narrower shuffle.

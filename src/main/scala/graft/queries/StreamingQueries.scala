@@ -54,9 +54,6 @@ object StreamingQueries {
     * co-resident queries keep their own setting.
     */
   private def withRocksDbState[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    // escape hatch for A/B timing the providers (tools/QueryTimer):
-    // SPARK_GRAFT_STREAM_STATE=heap keeps the default heap provider
-    if (sys.env.get("SPARK_GRAFT_STREAM_STATE").contains("heap")) return body
     val confs = Seq(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",

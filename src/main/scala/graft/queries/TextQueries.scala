@@ -12,8 +12,9 @@ import graft.ops.Text
   * through the same oracle. The reference operates on lines of one file;
   * here each document plays the role of a line-set with per-document offset
   * base 0 — the offset *arithmetic* (the quirky part, SURVEY.md §1) is
-  * identical and oracle-checked in q32. File-level semantics against
-  * `/root/reference/input.txt` are pinned by the golden ScalaTest suite.
+  * identical and oracle-checked in q32. File-level semantics are pinned
+  * by the golden ScalaTest suite (TextGoldenSpec) over a committed
+  * corpus that carries every §1 quirk.
   */
 object TextQueries {
 

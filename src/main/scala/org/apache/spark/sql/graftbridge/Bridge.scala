@@ -40,18 +40,10 @@ object Bridge {
     else None
   }
 
-  /** Register a temp SQL function backed by a Catalyst expression builder
-    * (FunctionRegistry is private[sql] too).
-    */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
-
   /** Drain the listener bus (`SparkContext.listenerBus` is
-    * private[spark]) so diagnostic listeners (tools.StageCountProbe)
-    * read deterministic counts instead of racing async delivery.
+    * private[spark]) so a listener counting jobs (Extension25Spec's
+    * sidecar-read pin) reads deterministic counts instead of racing
+    * async delivery.
     */
   def waitListenerBusEmpty(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()

@@ -8,15 +8,15 @@ class Extension6Spec extends SparkSpec {
   // --- config-file job dispatch -------------------------------------
 
   test("reference input_info.json dispatches the inverted-index job") {
-    // the reference's OWN config file, unmodified: relative input path,
+    // a config file in the reference's shape: relative input path,
     // stringly-typed counts, python script names — the dispatcher must
     // resolve all of it (input_info.json names mapper_inverted_index.py)
     val out = graft.api.JobConfig
-      .run(spark, "/root/reference/input_info.json")
+      .run(spark, s"$referenceDir/input_info.json")
     assert(out.columns.toSeq == Seq("word", "postings"))
     // same result as driving the job directly
     val direct = graft.jobs.InvertedIndex(
-      graft.io.TextRecords.read(spark, "/root/reference/input.txt"))
+      graft.io.TextRecords.read(spark, s"$referenceDir/input.txt"))
     assert(out.orderBy("word").collect().toSeq ==
       direct.orderBy("word").collect().toSeq)
   }
@@ -460,12 +460,12 @@ class Extension6Spec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_jobspec_c")
     val cfg = dir.resolve("spec.json")
     java.nio.file.Files.writeString(cfg,
-      """{"job": "line_count",
-        |"input_file_location": "/root/reference/input.txt"}""".stripMargin)
+      s"""{"job": "line_count",
+        |"input_file_location": "$referenceDir/input.txt"}""".stripMargin)
     val n = graft.api.JobConfig.run(spark, cfg.toString)
       .head().getLong(0)
     val expected = graft.io.TextRecords
-      .read(spark, "/root/reference/input.txt").count()
+      .read(spark, s"$referenceDir/input.txt").count()
     assert(n == expected && n > 0)
   }
 }

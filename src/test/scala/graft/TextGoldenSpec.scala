@@ -5,15 +5,17 @@ import scala.io.Source
 import graft.io.TextRecords
 import graft.jobs.{InvertedIndex, WordCount}
 
-/** Golden-semantics tests (SURVEY.md §5.1) against the reference's own
-  * corpus: an independent, deliberately-naive Scala replay of the Python
+/** Golden-semantics tests (SURVEY.md §5.1) against a reference-shaped
+  * corpus (src/test/resources/reference/input.txt, hand-written to carry
+  * every SURVEY.md §1 quirk): an independent, deliberately-naive Scala
+  * replay of the Python
   * semantics (readlines keeps "\n"; blank-drop; regex clean; cumulative
   * cleaned offset with +1 per blank; per-word offset advancing len+1 for
   * non-empty tokens only) compared against the distributed pipelines.
   */
 class TextGoldenSpec extends SparkSpec {
 
-  private val inputPath = "/root/reference/input.txt"
+  private lazy val inputPath = s"$referenceDir/input.txt"
 
   /** Python readlines(): split after every \n, keep the terminator. */
   private def readLinesLikePython(path: String): Seq[String] = {
